@@ -170,9 +170,9 @@ object TileOps {
     * distributed form of the reference's kernels
     * (reference: buteo/array/convolution/base.py:412-549, funcs.py:12-288).
     *
-    * Stencil shuffle: every tile is sent to itself + its 8 neighbors keyed
-    * by target cell; each group assembles a (w+2r)×(h+2r) padded plane and
-    * runs the kernel. Out-of-raster area stays "absent" — methods operate
+    * Stencil shuffle: one border-strip halo exchange (`convolvePad`); each
+    * center tile gets a (w+2r)×(h+2r) padded plane and runs the kernel.
+    * Out-of-raster area stays "absent" — methods operate
     * on in-bounds, non-nodata neighbors only (the reference's edge
     * renormalization semantics, convolution/base.py:114-156).
     *
@@ -182,10 +182,17 @@ object TileOps {
   implicit val padEnc: org.apache.spark.sql.Encoder[(Tile, Array[Double], Int, Int)] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
 
-  /** Halo exchange: each tile is shipped to itself + its 8 neighbors;
-    * every surviving center tile is returned with its (w+2r)×(h+2r)
-    * padded plane (NaN = outside raster). The shared stencil primitive
-    * behind convolve / bilinear / DEM gradients.
+  /** Halo exchange: each tile is shipped whole to its own key, and to each
+    * of its 8 neighbors only the border strip that neighbor reads — the
+    * first/last min(r, w) columns, min(r, h) rows, or a corner block of
+    * both — so the shuffle carries the plane plus its halo ring, not 9
+    * copies of it. A strip is a `Tile` of the strip's size keeping its
+    * source cell, so it abuts the center at -strip.w / ct.w exactly where
+    * the whole tile would. Every surviving center tile is returned with
+    * its (w+2r)×(h+2r) padded plane (NaN = outside raster; the halo spans
+    * one neighbor ring, so a radius past a neighbor's size stays NaN
+    * beyond it). The shared stencil primitive behind convolve / bilinear /
+    * DEM gradients.
     */
   def convolvePad(tiles: Dataset[Tile], radius: Int): Dataset[(Tile, Array[Double], Int, Int)] = {
     val spark = tiles.sparkSession
@@ -193,8 +200,10 @@ object TileOps {
     val r = radius
     tiles
       .flatMap { t =>
-        for (dx <- -1 to 1; dy <- -1 to 1)
-          yield ((t.cellX + dx, t.cellY + dy, t.band), t)
+        for {
+          dx <- -1 to 1; dy <- -1 to 1
+          if t.cellX + dx >= 0 && t.cellY + dy >= 0
+        } yield ((t.cellX + dx, t.cellY + dy, t.band), haloStrip(t, dx, dy, r))
       }
       .groupByKey(_._1)
       .flatMapGroups { (key: (Int, Int, Int), it: Iterator[((Int, Int, Int), Tile)]) =>
@@ -206,7 +215,7 @@ object TileOps {
             val pw = ct.w + 2 * r; val ph = ct.h + 2 * r
             val pad = Array.fill(pw * ph)(Double.NaN)
             pieces.foreach { p =>
-              // piece origin in padded coords; left/top neighbors abut the
+              // piece origin in padded coords; left/top strips abut the
               // center at -p.w/-p.h (their own size), right/bottom at ct.w/ct.h
               val offX = r + ((p.cellX - cx) match {
                 case -1 => -p.w; case 0 => 0; case _ => ct.w })
@@ -227,6 +236,33 @@ object TileOps {
             Iterator.single((ct, pad, pw, ph))
         }
       }
+  }
+
+  /** The part of `t` that the tile at offset (dx, dy) from it reads in a
+    * radius-`r` halo: the whole tile for (0, 0), else the facing border
+    * strip.
+    */
+  private def haloStrip(t: Tile, dx: Int, dy: Int, r: Int): Tile =
+    if (dx == 0 && dy == 0) t
+    else {
+      val (c0, sw) = stripSpan(dx, t.w, r)
+      val (r0, sh) = stripSpan(dy, t.h, r)
+      val px = new Array[Double](sw * sh)
+      var y = 0
+      while (y < sh) {
+        System.arraycopy(t.pixels, (r0 + y) * t.w + c0, px, y * sw, sw)
+        y += 1
+      }
+      t.copy(w = sw, h = sh, pixels = px)
+    }
+
+  /** (start, length) along an axis of `n` cells of the strip a neighbor
+    * at offset `d` reads: d = 1 (the neighbor comes after) reads the last
+    * min(r, n) cells, d = -1 the first min(r, n), d = 0 all of them.
+    */
+  private[tiles] def stripSpan(d: Int, n: Int, r: Int): (Int, Int) = {
+    val k = math.min(r, n)
+    if (d > 0) (n - k, k) else if (d < 0) (0, k) else (0, n)
   }
 
   /** Neighborhood convolution over the halo-exchanged padded planes with

@@ -242,20 +242,8 @@ object TileOps3 {
                                   src: Array[(Double, Long)],
                                   ref: Array[(Double, Long)]): Dataset[Tile] = {
     val spark = source.sparkSession
-    val srcN = src.map(_._2).sum
-    val refN = ref.map(_._2).sum
-    // source CDF rank (in reference counts' scale): nearest-rank target =
-    // first ref value with cumRef·srcN ≥ cumSrc·refN — ALL-Long exact
-    // (pixel counts ≤ ~3·10⁹ per side before the cross product nears
-    // Long range; beyond that lift to BigInt, nothing else changes)
-    val refCum = ref.scanLeft(0L)(_ + _._2).tail
-    var cum = 0L
-    val mapping = src.map { case (v, n) =>
-      cum += n
-      var i = 0
-      while (i < ref.length - 1 && refCum(i) * srcN < cum * refN) i += 1
-      v -> ref(i)._1
-    }.toMap
+    val rank = nearestRank(src.map(_._2), ref.map(_._2))
+    val mapping = src.indices.map(j => src(j)._1 -> ref(rank(j))._1).toMap
     val bc = spark.sparkContext.broadcast(mapping)
     source.map { t =>
       val out = new Array[Double](t.pixels.length)
@@ -269,11 +257,60 @@ object TileOps3 {
     }(TileOps.tileEnc)
   }
 
+  /** Nearest-rank inverse-CDF match of two sorted histograms' counts:
+    * source entry j maps to the first reference entry i whose cumulative
+    * share reaches j's, refCum(i) / refN ≥ srcCum(j) / srcN. The test
+    * runs as refCum(i)·srcN ≥ srcCum(j)·refN on exact 128-bit products,
+    * so per-side totals up to Long.MaxValue cannot wrap. Both cumulative
+    * sums rise, so this is one merge pass.
+    */
+  private def nearestRank(src: Array[Long], ref: Array[Long]): Array[Int] = {
+    val srcN = src.sum
+    val refN = ref.sum
+    val out = new Array[Int](src.length)
+    var cum = 0L
+    var refCum = if (ref.isEmpty) 0L else ref(0)
+    var i = 0
+    var j = 0
+    while (j < src.length) {
+      cum += src(j)
+      while (i < ref.length - 1 && productLess(refCum, srcN, cum, refN)) {
+        i += 1
+        refCum += ref(i)
+      }
+      out(j) = i
+      j += 1
+    }
+    out
+  }
+
+  /** a·b < c·d for non-negative Longs, exact (128-bit products). */
+  private def productLess(a: Long, b: Long, c: Long, d: Long): Boolean = {
+    val hi1 = Math.multiplyHigh(a, b); val hi2 = Math.multiplyHigh(c, d)
+    hi1 < hi2 || (hi1 == hi2 && java.lang.Long.compareUnsigned(a * b, c * d) < 0)
+  }
+
+  /** Dense source-bin → reference value lookup over bin-sorted
+    * (bin, count, min value) histograms: each source bin takes its
+    * nearest-rank reference bin's minimum value; bins absent from the
+    * source stay NaN.
+    */
+  private[tiles] def binnedLut(srcB: Array[(Int, Long, Double)],
+                               refB: Array[(Int, Long, Double)],
+                               maxBins: Int): Array[Double] = {
+    val lut = new Array[Double](maxBins)
+    java.util.Arrays.fill(lut, Double.NaN)
+    val rank = nearestRank(srcB.map(_._2), refB.map(_._2))
+    var j = 0
+    while (j < srcB.length) { lut(srcB(j)._1) = refB(rank(j))._3; j += 1 }
+    lut
+  }
+
   /** Binned histogram matching for continuous-valued rasters: the
     * per-value histograms are folded DISTRIBUTIVELY into `maxBins`
     * fixed-width bins over the reference/source value ranges; the
     * nearest-rank inverse-CDF mapping then runs over bin CDFs with the
-    * SAME exact Long rank arithmetic as the exact path, and every output
+    * SAME exact rank test as the exact path (`nearestRank`), and every output
     * value is an actual reference value (the matched reference bin's
     * MINIMUM member — the nearest-rank convention at bin granularity).
     * Driver state is ≤ 2·maxBins rows regardless of raster cardinality;
@@ -306,21 +343,7 @@ object TileOps3 {
         }
         .map(_._2)
         .collect().sortBy(_._1)
-    val srcB = binned(srcDf, sLo, sHi)
-    val refB = binned(refDf, rLo, rHi)
-    val srcN = srcB.map(_._2).sum
-    val refN = refB.map(_._2).sum
-    val refCum = refB.scanLeft(0L)(_ + _._2).tail
-    // dense source-bin → reference value lookup (nearest-rank over bins)
-    val lut = new Array[Double](maxBins)
-    java.util.Arrays.fill(lut, Double.NaN)
-    var cum = 0L
-    srcB.foreach { case (bin, n, _) =>
-      cum += n
-      var i = 0
-      while (i < refB.length - 1 && refCum(i) * srcN < cum * refN) i += 1
-      lut(bin) = refB(i)._3
-    }
+    val lut = binnedLut(binned(srcDf, sLo, sHi), binned(refDf, rLo, rHi), maxBins)
     val bc = spark.sparkContext.broadcast(lut)
     val (lo, hi) = (sLo, sHi)
     val mb = maxBins

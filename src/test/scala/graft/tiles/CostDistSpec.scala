@@ -1,10 +1,21 @@
 package graft.tiles
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 object CostDistSpec {
   val W = 48
+
+  /** A random obstacle field over a grid that tile size `ts` does not
+    * divide (when ts > 1), with sources on tile corners and edges.
+    */
+  final case class Field(ts: Int, w: Int, h: Int, open: Array[Boolean],
+                         sources: Seq[(Int, Int)]) {
+    def mask(x: Int, y: Int): Boolean = open(y * w + x)
+  }
 
   /** Scattered-obstacle field (deterministic, ~1/5 blocked). */
   def openMask(x: Int, y: Int): Boolean = (x * 7 + y * 11) % 5 != 0 ||
@@ -18,21 +29,21 @@ object CostDistSpec {
   def mazeMask(x: Int, y: Int): Boolean =
     x % 4 != 2 || (if ((x / 4) % 2 == 0) y == 0 else y == W - 1)
 
-  /** Single-threaded exact-integer Dijkstra over the full grid. */
-  def brute(mask: (Int, Int) => Boolean,
-            sources: Seq[(Int, Int)]): Map[(Int, Int), (Int, Int)] = {
-    val s = Array.fill(W * W)(-1); val d = Array.fill(W * W)(-1)
+  /** Single-threaded exact-integer relaxation over the full w × h grid. */
+  def brute(mask: (Int, Int) => Boolean, sources: Seq[(Int, Int)],
+            w: Int = W, h: Int = W): Map[(Int, Int), (Int, Int)] = {
+    val s = Array.fill(w * h)(-1); val d = Array.fill(w * h)(-1)
     val moves = Seq((1, 0, false), (-1, 0, false), (0, 1, false), (0, -1, false),
       (1, 1, true), (1, -1, true), (-1, 1, true), (-1, -1, true))
     var frontier = sources.filter { case (x, y) => mask(x, y) }.map { case (x, y) =>
-      s(y * W + x) = 0; d(y * W + x) = 0; y * W + x
+      s(y * w + x) = 0; d(y * w + x) = 0; y * w + x
     }.toSet
     while (frontier.nonEmpty) { // Bellman-Ford sweeps: exact & simple
       val next = scala.collection.mutable.Set.empty[Int]
       for (u <- frontier; (dx, dy, diag) <- moves) {
-        val x = u % W + dx; val y = u / W + dy
-        if (x >= 0 && x < W && y >= 0 && y < W && mask(x, y)) {
-          val v = y * W + x
+        val x = u % w + dx; val y = u / w + dy
+        if (x >= 0 && x < w && y >= 0 && y < h && mask(x, y)) {
+          val v = y * w + x
           val ns = if (diag) s(u) else s(u) + 1
           val nd = if (diag) d(u) + 1 else d(u)
           if (CostDist.less(ns, nd, s(v), d(v))) {
@@ -42,8 +53,8 @@ object CostDistSpec {
       }
       frontier = next.toSet
     }
-    (for (i <- 0 until W * W if s(i) >= 0)
-      yield (i % W, i / W) -> (s(i), d(i))).toMap
+    (for (i <- 0 until w * h if s(i) >= 0)
+      yield (i % w, i / w) -> (s(i), d(i))).toMap
   }
 }
 
@@ -63,11 +74,83 @@ class CostDistSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def sparkDist(mask: (Int, Int) => Boolean, sources: Seq[(Int, Int)],
-                        tileSize: Int): Map[(Int, Int), (Int, Int)] = {
-    val spec = RasterSpec(0.0, 64.0, 0.25, -0.25, W, W, tileSize, 1)
+                        tileSize: Int, w: Int = W, h: Int = W): Map[(Int, Int), (Int, Int)] = {
+    val spec = RasterSpec(0.0, 64.0, 0.25, -0.25, w, h, tileSize, 1)
     val m = TileOps.createRaster(spark, spec)((x, y, _) => if (mask(x, y)) 1.0 else 0.0)
-    CostDist.octileDistance(m, sources, tileSize, width = W)
+    CostDist.octileDistance(m, sources, tileSize, width = w)
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> (r.getInt(2), r.getInt(3))).toMap
+  }
+
+  private val fieldGen: Gen[Field] = for {
+    ts <- Gen.oneOf(1, 2, 3, 7)
+    w <- Gen.choose(5, 16).suchThat(w => ts == 1 || w % ts != 0)
+    h <- Gen.choose(4, 13)
+    blocked <- Gen.choose(0.05, 0.4)
+    open <- Gen.listOfN(w * h, Gen.choose(0.0, 1.0)).map(_.map(_ >= blocked).toArray)
+    // a tile's first or last column/row, or anywhere
+    edge = (n: Int) => Gen.oneOf(
+      Gen.choose(0, (n - 1) / ts).map(_ * ts),
+      Gen.choose(0, (n - 1) / ts).map(k => math.min(n - 1, k * ts + ts - 1)),
+      Gen.choose(0, n - 1))
+    sources <- Gen.choose(1, 3).flatMap(k => Gen.listOfN(k, Gen.zip(edge(w), edge(h))))
+  } yield {
+    sources.foreach { case (x, y) => open(y * w + x) = true }
+    Field(ts, w, h, open, sources.distinct)
+  }
+
+  test("property: random obstacle fields match brute force at tiles 1/2/3/7") {
+    var s = Seed(20261017L)
+    for (_ <- 0 until 24) {
+      val f = fieldGen.pureApply(Gen.Parameters.default, s)
+      s = s.next
+      val want = brute(f.mask, f.sources, f.w, f.h)
+      val got = sparkDist(f.mask, f.sources, f.ts, f.w, f.h)
+      assert(got === want, s"ts=${f.ts} ${f.w}x${f.h} sources=${f.sources}")
+    }
+  }
+
+  test("loop state keeps defaultParallelism partitions in every round") {
+    // AQE would size a shuffled reduce stage from its bytes, and the
+    // border strips are tiny; every loop job must still run one task per
+    // partition of the fixed partitioner
+    val par = spark.sparkContext.defaultParallelism
+    val marker = "costdist-parallelism-marker"
+    for (ts <- Seq(4, 16)) {
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]()
+      @volatile var flushed = false
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty("spark.job.description") == marker)
+            flushed = true
+          else jobs.add(e.stageInfos.sortBy(_.stageId).map(_.numTasks))
+      }
+      val spec = RasterSpec(0.0, 64.0, 0.25, -0.25, W, W, ts, 1)
+      // a 1-partition mask: only the loop's partitioner sets its width
+      val m = TileOps.createRaster(spark, spec, partitions = 1)(
+        (x, y, _) => if (mazeMask(x, y)) 1.0 else 0.0).cache()
+      m.count()
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        CostDist.octileDistance(m, Seq((0, 0)), ts, width = W)
+        spark.sparkContext.setJobDescription(marker)
+        spark.sparkContext.parallelize(Seq(1), 1).count()
+        spark.sparkContext.setJobDescription(null)
+        val deadline = System.nanoTime() + 30e9.toLong
+        while (!flushed && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(flushed, "listener events not delivered")
+      } finally {
+        spark.sparkContext.removeSparkListener(listener)
+        m.unpersist()
+      }
+      val rounds = jobs.toArray(Array.empty[Seq[Int]]).toSeq
+      // the maze needs many rounds at either tile size
+      assert(rounds.size >= 3, s"ts=$ts: ${rounds.size} loop jobs")
+      rounds.zipWithIndex.foreach { case (tasks, i) =>
+        assert(tasks.last === par, s"ts=$ts round $i result stage: $tasks")
+        // every stage but round 1's initial shuffle of the mask
+        assert(tasks.drop(if (i == 0) 1 else 0).forall(_ == par), s"ts=$ts round $i: $tasks")
+      }
+    }
   }
 
   test("exact-integer comparator: sign of Δs + Δd·√2 on adversarial pairs") {
