@@ -98,16 +98,17 @@ object RangeJoin {
     GraftFunctions.register(spark)
 
     // the probe set is a BROADCAST side by contract (it is collected and
-    // its radius covers exploded on the driver): fail loudly before the
-    // collect when it exceeds the declared bound, instead of an implicit
-    // driver OOM (VERDICT r5 #7 — the KnnJoin bounded-probe contract)
-    val nProbes = probes.count()
-    require(nProbes <= maxProbes,
-      s"rangeJoinCells: $nProbes probes exceed the broadcast bound " +
-        s"$maxProbes; raise maxProbes only if the driver can hold the " +
-        s"probe covers, or flip the sides")
-    val probeArr = probes.select("id", "x", "y")
-      .as[(Long, Long, Long)].collect().sortBy(_._1)
+    // its radius covers exploded on the driver): one bounded collect of
+    // at most maxProbes + 1 rows, failing loudly past the declared bound
+    // instead of an implicit driver OOM (the KnnJoin bounded-probe
+    // contract)
+    val probeArr = probes.select("id", "x", "y").as[(Long, Long, Long)]
+      .limit(if (maxProbes >= Int.MaxValue) Int.MaxValue else maxProbes.toInt + 1)
+      .collect().sortBy(_._1)
+    require(probeArr.length <= maxProbes,
+      s"rangeJoinCells: more than $maxProbes probes, past the broadcast " +
+        s"bound; raise maxProbes only if the driver can hold the probe " +
+        s"covers, or flip the sides")
     val n = 1L << level
     // Cells covering each probe's radius box. lonToX/latToY are monotone
     // in their double argument and x/1e6 rounds monotonically, so the

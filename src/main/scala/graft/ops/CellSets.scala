@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   * 4-row-group hash aggregate, each round shrinking the live set by ≥4×
   * (only complete quads survive into the next round) — geometric total
   * work off one materialization, log-depth like the star-contraction CC.
-  * Rounds are localCheckpoint'd (the [[Dedup.connectedComponents]]
-  * pattern) so the final union is L small scans, not L re-computations.
+  * Rounds are localCheckpoint'd so the final union is L small scans,
+  * not L re-computations.
   * The closing anti join keys parent-vs-cell on sets no larger than the
   * input. Nothing is keyed wider than one Long.
   */
@@ -81,8 +81,7 @@ object CellSets {
   private def compactWith(cells: DataFrame, cellCol: String, y: Layout): DataFrame = {
     // lazy checkpoints throughout: the level collect (for base) and the
     // emptiness count (per round) each materialize their checkpoint in
-    // the same job — one job per round, the Dedup.connectedComponents
-    // pattern
+    // the same job — one job per round
     val base = cells.select(col(cellCol).cast("long").as("cell"))
       .distinct().localCheckpoint(eager = false)
     val lvlRows = base.select(lvlOf(col("cell"), y).as("l")).distinct().collect()

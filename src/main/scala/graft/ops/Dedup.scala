@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication operators for web-corpus pipelines: exact, MinHash+LSH,
   * n-gram Jaccard, SimHash. All hashing is md5-based so every stage is
@@ -568,22 +571,37 @@ object Dedup {
     * large-star / small-star contraction (Kiveris et al., "Connected
     * Components in MapReduce and Beyond", SoCC 2014 — public algorithm).
     *
-    * Each round is two hash aggregations plus two equi-joins, all keyed
-    * on a node id; no step materializes a neighborhood on the driver or
-    * in a single task row, so the algorithm survives components with
-    * billions of members — exactly the regime (giant near-dup clusters
-    * of boilerplate pages) where transitive closure is quadratic and
-    * plain label propagation needs diameter-many rounds. Convergence is
-    * O(log^2 n) rounds worst-case and a handful in practice; the edge
-    * set between rounds is `localCheckpoint`ed to truncate lineage (on a
-    * real cluster use a reliable checkpoint dir; the RESULT is the
+    * The loop runs on primitive `(Long, Long)` records (the
+    * [[LongPairs]] rule: Kryo-serialized shuffles, `long[]` task memory)
+    * under one `HashPartitioner(defaultParallelism)`, with no per-round
+    * Catalyst planning or code generation. The canonical edge set
+    * (u < v, ids read as Long, duplicates and self-loops dropped) is
+    * built once. Each round is three shuffles: the symmetrized edges by
+    * node (large-star), the large-star output by its larger endpoint
+    * (small-star), then the small-star output by its smaller endpoint
+    * (dedup). After each shuffle a partition is sorted locally by
+    * (key, value), so every key group streams with its minimum first and
+    * no neighbourhood is ever gathered into a row — the algorithm
+    * survives components with billions of members, exactly the regime
+    * (giant near-dup clusters of boilerplate pages) where transitive
+    * closure is quadratic and plain label propagation needs
+    * diameter-many rounds. Convergence is O(log² n) rounds worst-case and
+    * a handful in practice.
+    *
+    * Each round ends with one `localCheckpoint` and one fold job, which
+    * materializes it while computing the exact edge-set signature:
+    * count plus the exact (128-bit) sum of xxhash64(u, v). A star forest
+    * is the unique fixed point of the round, so an unchanged signature is
+    * convergence. The previous round is released once the next exists
+    * (on a real cluster use a reliable checkpoint dir; the RESULT is the
     * unique min-rooted star forest either way, independent of plan or
     * parallelism).
     *
-    * Input: `edges(src, dst)` — orientation and duplicates irrelevant,
-    * self-loops dropped. Output: `(node, component)` for every node that
-    * appears in an edge, component = smallest node id of its component
-    * (roots included as (root, root)).
+    * Input: `edges(src, dst)` with integral ids — orientation and
+    * duplicates irrelevant, self-loops and null endpoints dropped.
+    * Output: `(node, component)` of the input's id type for every node
+    * that appears in an edge, component = smallest node id of its
+    * component (roots included as (root, root)).
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 64): DataFrame =
     connectedComponentsWithRounds(edges, maxIter)._1
@@ -593,82 +611,98 @@ object Dedup {
     * (BENCH's `scaling_cc` block records it).
     */
   def connectedComponentsWithRounds(edges: DataFrame,
-                                    maxIter: Int = 64): (DataFrame, Int) = {
-    var e = edges
-      .select(least(col("src"), col("dst")).as("u"),
-              greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct()
-      .coalesce(Adapt.partitionsForPlan(edges))
-      .localCheckpoint(eager = false)
-    def signature(df: DataFrame): (Long, String) = {
-      // order-independent edge-set digest; decimal(38,0) sum never
-      // overflows (ANSI mode errors on long-sum overflow)
-      val r = df.agg(count(lit(1)),
-        sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).collect()(0)
-      (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toPlainString)
-    }
-    var sig = signature(e)
-    var converged = sig._1 == 0L
+                                    maxIter: Int = 64): (DataFrame, Int) =
+    starContraction(edges, maxIter, edges.sparkSession.sparkContext.defaultParallelism)
+
+  /** [[connectedComponentsWithRounds]] with the loop's partition count. */
+  private[ops] def starContraction(edges: DataFrame, maxIter: Int,
+                                   partitions: Int): (DataFrame, Int) = {
+    val idType = LongPairs.idType(edges)
+    val spark = edges.sparkSession
+    val part = new HashPartitioner(partitions)
+    // a null endpoint makes least = greatest, so u =!= v drops it too
+    val canon = LongPairs.read(edges
+      .select(least(col("src"), col("dst")).cast("long").as("u"),
+              greatest(col("src"), col("dst")).cast("long").as("v"))
+      .filter(col("u") =!= col("v")))
+    var e = LongPairs.shuffleSorted(canon, part, unique = true).localCheckpoint()
+    var sig = ccSignature(e)
+    var converged = sig.count == 0L
     var it = 0
-    // size-adaptive round partitioning from the edge count the signature
-    // already collects: saturates at the configured shuffle parallelism
-    // (identical plans at the 10^7-edge scale block), collapses the
-    // hundreds of near-empty per-round tasks on small graphs
-    var p = Adapt.partitionsFor(e, sig._1)
-    e = e.coalesce(p).localCheckpoint(eager = false)
     while (!converged && it < maxIter) {
-      val small = {
-        // large-star: for every node n of the SYMMETRIZED graph with
-        // m = min(n ∪ N(n)), connect every neighbor v > n to m. Emitted
-        // edges are canonical (m < v) by construction. No distinct here:
-        // duplicates ((n,v),(n',v) → same (m,v)) are swept by the round's
-        // final distinct — deduping early cost a full extra shuffle per
-        // round for nothing (measured 20-25% of round time on the
-        // 10^7-edge bench graph). Each phase REPARTITIONS ONCE on its key
-        // and lets both the min aggregate and the join consume that one
-        // exchange (the agg and the join otherwise each shuffle the raw
-        // edge set — 5 exchanges per round instead of 3; measured ~25%
-        // of round time on the same graph).
-        val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-          .repartition(p, col("u"))
-        val minsL = sym.groupBy("u").agg(least(min(col("v")), col("u")).as("m"))
-        val afterLarge = sym.join(minsL, "u")
-          .filter(col("v") > col("u"))
-          .select(col("m").as("u"), col("v"))
-          .repartition(p, col("v"))
-        // small-star: per larger endpoint v with low-neighbor set N (all
-        // < v), m = min(N); connect every node of N ∪ {v} except m to m.
-        val minsS = afterLarge.groupBy("v").agg(min(col("u")).as("m"))
-        afterLarge.join(minsS, "v")
-          .select(col("m"), col("u"))
-          .union(minsS.select(col("m"), col("v").as("u")))
-          .filter(col("u") =!= col("m"))
-          .select(col("m").as("u"), col("u").as("v"))
-          .distinct()
-          .coalesce(p)
-          // LAZY checkpoint: the signature aggregate right below is the
-          // batch's single job — it materializes the checkpoint blocks as
-          // it scans, where an eager checkpoint would spend a whole extra
-          // job (and a second pass over the cached round) per round
-          .localCheckpoint(eager = false)
+      // large-star: for every node n of the SYMMETRIZED graph with
+      // m = min(n ∪ N(n)), connect every neighbor x > n to m; emitted
+      // keyed by x. Duplicates ((n,x),(n',x) → same (m,x)) are swept by
+      // the round's dedup shuffle.
+      val sym = e.flatMap(b => Iterator.range(0, 2 * b.size).map { i =>
+        val j = i >> 1
+        if ((i & 1) == 0) (b.k(j), b.v(j)) else (b.v(j), b.k(j))
+      })
+      val large = LongPairs.shuffleSorted(sym, part).flatMap { b =>
+        LongPairs.groups(b).flatMap { case (s, end) =>
+          val n = b.k(s); val m = math.min(n, b.v(s))
+          var j = s
+          while (j < end && b.v(j) <= n) j += 1
+          Iterator.range(j, end).map(i => (b.v(i), m))
+        }
       }
+      // small-star: per larger endpoint x with low-neighbor set N (all
+      // < x), m = min(N); connect every node of N ∪ {x} except m to m
+      val small = LongPairs.shuffleSorted(large, part).flatMap { b =>
+        LongPairs.groups(b).flatMap { case (s, end) =>
+          val x = b.k(s); val m = b.v(s)
+          Iterator.range(s, end).filter(i => b.v(i) != m).map(i => (m, b.v(i))) ++
+            Iterator.single((m, x))
+        }
+      }
+      val next = LongPairs.shuffleSorted(small, part, unique = true).localCheckpoint()
       it += 1
-      val sigNew = signature(small)
-      p = Adapt.partitionsFor(small, sigNew._1)
-      // a star forest is the unique fixed point of the (large ∘ small)
-      // round, so an unchanged edge-set signature IS convergence (and
-      // the fixed point is idempotent, so a batched check that crosses
-      // convergence mid-batch still reads equal signatures)
+      val sigNew = ccSignature(next)
+      e.unpersist(blocking = false)
+      e = next
       converged = sigNew == sig
       sig = sigNew
-      e = small
     }
-    require(converged || sig._1 == 0L,
+    require(converged || sig.count == 0L,
       s"connectedComponents did not converge in $maxIter rounds")
-    (e.select(col("v").as("node"), col("u").as("component"))
-      .union(e.select(col("u"), col("u")).distinct()), it)
+    // a partition holds every edge of its roots (keyed by u), sorted: each
+    // root is emitted once, at the head of its group
+    val rows = e.flatMap { b =>
+      LongPairs.groups(b).flatMap { case (s, end) =>
+        val u = b.k(s)
+        Iterator.single(Row(u, u)) ++ Iterator.range(s, end).map(i => Row(b.v(i), u))
+      }
+    }
+    val out = spark.createDataFrame(rows, StructType(Seq(
+        StructField("node", LongType, nullable = false),
+        StructField("component", LongType, nullable = false))))
+      .select(col("node").cast(idType).as("node"),
+        col("component").cast(idType).as("component"))
+    (out, it)
   }
+
+  /** Edge-set signature of a CC round: an edge count and a 128-bit sum. */
+  private final case class CcSig(count: Long, hi: Long, lo: Long) {
+    def +(o: CcSig): CcSig = {
+      val l = lo + o.lo
+      val carry = if (java.lang.Long.compareUnsigned(l, lo) < 0) 1L else 0L
+      CcSig(count + o.count, hi + o.hi + carry, l)
+    }
+  }
+
+  /** The fold job that materializes a round: edge count and the exact
+    * sum of xxhash64(u, v) (the SQL function's seed-42 chain).
+    */
+  private def ccSignature(e: org.apache.spark.rdd.RDD[LongPairs.Block]): CcSig =
+    e.map { b =>
+      var acc = CcSig(0L, 0L, 0L); var i = 0
+      while (i < b.size) {
+        val h = XXH64.hashLong(b.v(i), XXH64.hashLong(b.k(i), 42L))
+        acc = acc + CcSig(1L, h >> 63, h)
+        i += 1
+      }
+      acc
+    }.fold(CcSig(0L, 0L, 0L))(_ + _)
 
   /** Near-duplicate clusters from MinHash-LSH buckets: every document
     * that shares any (band, key) bucket with another lands in the same
@@ -696,6 +730,8 @@ object Dedup {
       .filter(col("doc_id") =!= col("root"))
       .select(col("doc_id").as("src"), col("root").as("dst"))
     val comp = connectedComponents(edges)
+    // the CC loop has consumed the edges and checkpointed its result
+    banded.unpersist()
     docs.select(col("doc_id"))
       .join(comp, col("doc_id") === col("node"), "left")
       .select(col("doc_id"),

@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -297,40 +300,6 @@ object WebOps {
         (col("sc").isNull || col("sc") === -1 || col("sc") % 2 === 1).as("allowed"))
   }
 
-  /** Host-graph PageRank with EXACT integer fixed-point arithmetic —
-    * the link-based quality prior crawl-curation pipelines weight
-    * sampling by (the published recipe: Page et al. 1999; used as a
-    * corpus-quality signal in CCNet/RefinedWeb-style curation).
-    *
-    * Why integer fixed-point: floating-point PageRank sums incoming
-    * contributions in partition order, so two runs (or Spark vs the
-    * DuckDB oracle) disagree in the last ulps. Here ranks live on an
-    * integer grid of `scale` total mass units and every step is Long
-    * arithmetic — per-edge contribution `(r*dampNum) div (dampDen*deg)`,
-    * uniform dangling redistribution, and the teleport base — so sums
-    * are order-independent and the result is bit-identical at any
-    * parallelism AND in ANSI SQL (`div` and DuckDB's `//` agree on
-    * non-negative operands, and every quantity here is non-negative).
-    * Quantization loss is bounded: each division floors away < 1 unit
-    * per (edge ∪ node), so total mass drifts < (|E|+2|V|)·iters units
-    * of `scale` — at the default 10^12 scale that is a 10^-12-relative
-    * error per edge, far below float noise.
-    *
-    * Scale shape (10^9 hosts, 10^11 edges): edges are deduped,
-    * self-loop-stripped, repartitioned ONCE on src and persisted; the
-    * out-degree table reuses that exchange. Each round is two shuffles
-    * (ranks → src partitioning for the join, contributions → dst for
-    * the sum) with map-side combine on the contribution aggregate, so a
-    * hot authority (10^8 in-links) costs its reducer merged partials,
-    * not raw edges. The dangling mass is ONE Long collected per round
-    * (bounded driver traffic) and its collect doubles as the round's
-    * materializing action for the lazy lineage checkpoint — the same
-    * fused-job pattern as [[Dedup.connectedComponentsWithRounds]].
-    *
-    * Input: `edges(src, dst)` host ids (any integral/string type;
-    * duplicates and self-loops tolerated). Returns `(host, rank)` for
-    * every host appearing in any edge; Σrank ≈ scale.
-    */
   /** HITS hubs & authorities (Kleinberg, "Authoritative sources in a
     * hyperlinked environment", JACM 1999) in exact fixed-iteration form:
     * auth₀ = 1 for every node, then `iters` rounds of
@@ -346,8 +315,8 @@ object WebOps {
     *
     * Plan shape per half-round: one equi-join (edge side re-keyed once
     * per direction and reused every round) + one map-side-combined hash
-    * aggregation — the same 10¹²-edge-safe shape as [[pageRank]], with
-    * no driver-side state at all (HITS has no dangling-mass scalar).
+    * aggregation — 10¹²-edge-safe, with no driver-side state at all
+    * (HITS has no dangling-mass scalar).
     * Output: `(node, hub, auth)` for every node in the edge set, zeros
     * for sink/source-only nodes.
     */
@@ -399,77 +368,160 @@ object WebOps {
     out
   }
 
+  /** Host-graph PageRank with EXACT integer fixed-point arithmetic —
+    * the link-based quality prior crawl-curation pipelines weight
+    * sampling by (the published recipe: Page et al. 1999; used as a
+    * corpus-quality signal in CCNet/RefinedWeb-style curation).
+    *
+    * Why integer fixed-point: floating-point PageRank sums incoming
+    * contributions in partition order, so two runs (or Spark vs the
+    * DuckDB oracle) disagree in the last ulps. Here ranks live on an
+    * integer grid of `scale` total mass units and every step is Long
+    * arithmetic — per-edge contribution `(r*dampNum) div (dampDen*deg)`,
+    * uniform dangling redistribution, and the teleport base — so sums
+    * are order-independent and the result is bit-identical at any
+    * parallelism (and equal to the DuckDB oracle's `//` on these
+    * non-negative operands). Every product and sum that can overflow
+    * uses `Math.multiplyExact` / `addExact`, so an overflow throws as it
+    * did in ANSI SQL instead of wrapping. Quantization loss is bounded:
+    * each division floors away < 1 unit per (edge ∪ node), so total mass
+    * drifts < (|E|+2|V|)·iters units of `scale` — at the default 10^12
+    * scale that is a 10^-12-relative error per edge, far below float
+    * noise.
+    *
+    * Scale shape (10^9 hosts, 10^11 edges): the loop runs on primitive
+    * `(Long, Long)` records (the [[LongPairs]] rule: Kryo-serialized
+    * shuffles, `long[]` task memory) under one
+    * `HashPartitioner(defaultParallelism)`, with no per-round Catalyst
+    * planning. The adjacency (`src → distinct dst[]`, deduped and
+    * self-loop-stripped) and the node/dangling table are built once into
+    * one checkpointed block per partition, co-partitioned with the
+    * `(host, rank)` state. Each iteration is a narrow join of the ranks
+    * with the adjacency, a `reduceByKey` of the contributions (map-side
+    * combined, so a hot authority with 10^8 in-links costs its reducer
+    * merged partials, not raw edges) and a narrow left join with the
+    * nodes. It ends with one `localCheckpoint` and one fold job, which
+    * materializes the round and sums its dangling mass — one Long for
+    * the driver, used by the next round. Nothing is broadcast, and no
+    * iteration waits on another's lazy plan.
+    *
+    * Input: `edges(src, dst)` integral host ids (duplicates and
+    * self-loops tolerated). Returns `(host, rank)` of the input's id type
+    * for every host appearing in any edge; Σrank ≈ scale.
+    */
   def pageRank(edges: DataFrame, iters: Int = 5,
                scale: Long = 1000000000000L,
                dampNum: Long = 17, dampDen: Long = 20): DataFrame = {
     require(iters >= 1 && scale > 0 && dampNum >= 0 && dampDen > dampNum,
       s"pageRank: need iters>=1, scale>0, 0<=dampNum<dampDen; got " +
         s"iters=$iters scale=$scale damp=$dampNum/$dampDen")
-    var e = edges
-      .select(col("src"), col("dst"))
+    val idType = LongPairs.idType(edges)
+    val spark = edges.sparkSession
+    val part = new HashPartitioner(spark.sparkContext.defaultParallelism)
+    val links = LongPairs.read(edges
+      .select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .distinct()
-      .repartition(Adapt.partitionsForPlan(edges), col("src"))
-      .persist()
-    var nodes = e.select(col("src").as("host"))
-      .union(e.select(col("dst").as("host")))
-      .distinct()
-      .coalesce(Adapt.partitionsForPlan(edges))
-      .persist()
-    val n = nodes.count()
+        col("src") =!= col("dst")))
+    // distinct out-links, sorted by (src, dst) in src's partition
+    val out = LongPairs.shuffleSorted(links, part, unique = true)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // every link target is a node too: its distinct ids, sent to their
+    // own partitions (map-side combined)
+    val targets = out.flatMap(b => b.v.iterator.map(d => (d, 0L)))
+      .reduceByKey(part, (a, _) => a)
+    // checkpointed, so no round's lineage reaches back to the input
+    val graph = out.zipPartitions(targets, preservesPartitioning = true) { (bs, ts) =>
+      Iterator(PrGraph(bs.next(), ts.map(_._1)))
+    }.localCheckpoint()
+    val (n, nDang) = graph.map(g => (g.hosts.length.toLong, g.dangling.toLong))
+      .fold((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
+    out.unpersist(blocking = false)
+    if (n == 0) graph.unpersist(blocking = false)
     require(n > 0, "pageRank: empty edge set")
-    val pN = Adapt.partitionsFor(nodes, n)
-    // out-degree rides the cached edge frame (one setup join) and the
-    // dangling flag rides the node/rank state (one setup anti-probe):
-    // each round then needs NO join for the dangling mass — a map-only
-    // filtered sum over the round's own checkpoint — and one join fewer
-    // for the contributions. Exchanges per round: 2 (round state into
-    // the edge join, contribution aggregate). Both frames materialize
-    // inside round 1's first job.
-    val e2 = e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-      .coalesce(math.max(pN, Adapt.partitionsForPlan(edges)))
-      .persist()
-    val nodesF = nodes
-      .join(e.select(col("src").as("host"), lit(true).as("has_out")).distinct(),
-        Seq("host"), "left")
-      .select(col("host"), col("has_out").isNull.as("dang"))
-      .coalesce(pN)
-      .persist()
     // teleport base: floor(scale*(1-d)/N) in the same op order as the SQL
     val base = (scale * (dampDen - dampNum)) / (dampDen * n)
-    var ranks = nodesF.select(col("host"), lit(scale / n).as("rank"), col("dang"))
-      .localCheckpoint(eager = false)
+    val dangDen = dampDen * n
+    // rank state: (host, rank) blocks aligned with the graph's hosts
+    var ranks = graph.map(g => new LongPairs.Block(g.hosts, Array.fill(g.hosts.length)(scale / n)))
+    var dangm = Math.multiplyExact(scale / n, nDang)
     var it = 0
     while (it < iters) {
-      // dangling mass of the CURRENT ranks, kept LAZY: a one-row aggregate
-      // broadcast-cross-joined into the round instead of a per-round
-      // driver collect — the whole iters-round fixed point is then ONE
-      // submitted query cascade (the per-round collect cost a driver
-      // sync + a full plan/codegen pass per round, which dominated the
-      // op on host-scale graphs). Same exact integer arithmetic:
-      // dShare = (dang·dampNum) div (dampDen·n), all non-negative Longs.
-      val dangDf = ranks.filter(col("dang"))
-        .agg(coalesce(sum(col("rank")), lit(0L)).as("dangm"))
-      val contrib = ranks.join(e2, ranks("host") === e2("src"))
-        .select(col("dst"),
-          expr(s"(rank * $dampNum) div ($dampDen * deg)").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("contrib"))
-      ranks = nodesF.join(contrib, nodesF("host") === contrib("dst"), "left")
-        .crossJoin(broadcast(dangDf))
-        .select(col("host"),
-          (lit(base) + expr(s"(dangm * $dampNum) div ${dampDen * n}") +
-            coalesce(col("contrib"), lit(0L))).as("rank"),
-          col("dang"))
-        .coalesce(pN) // keep the checkpointed round state size-partitioned
-        .localCheckpoint(eager = false)
+      val share = Math.addExact(base, Math.multiplyExact(dangm, dampNum) / dangDen)
+      val contrib = graph.zipPartitions(ranks) { (gs, rs) =>
+        val g = gs.next(); val r = rs.next()
+        Iterator.range(0, g.hosts.length).flatMap { i =>
+          val deg = g.degree(i)
+          if (deg == 0) Iterator.empty
+          else {
+            val c = Math.multiplyExact(r.v(i), dampNum) / Math.multiplyExact(dampDen, deg.toLong)
+            Iterator.range(g.start(i), g.start(i + 1)).map(j => (g.dst(j), c))
+          }
+        }
+      }.reduceByKey(part, Math.addExact(_: Long, _: Long))
+      val next = graph.zipPartitions(contrib, preservesPartitioning = true) { (gs, cs) =>
+        val g = gs.next()
+        val c = LongPairs.sorted(cs, unique = false)
+        val r = new Array[Long](g.hosts.length)
+        var i = 0; var j = 0
+        while (i < r.length) {
+          // contribution keys are distinct hosts of this partition
+          val add = if (j < c.size && c.k(j) == g.hosts(i)) { j += 1; c.v(j - 1) } else 0L
+          r(i) = Math.addExact(share, add)
+          i += 1
+        }
+        Iterator(new LongPairs.Block(g.hosts, r))
+      }.localCheckpoint()
+      // the round's one job: materializes the checkpoint and sums the
+      // dangling mass the next round redistributes
+      dangm = graph.zipPartitions(next) { (gs, rs) =>
+        val g = gs.next(); val r = rs.next()
+        var s = 0L; var i = 0
+        while (i < r.size) {
+          if (g.degree(i) == 0) s = Math.addExact(s, r.v(i))
+          i += 1
+        }
+        Iterator(s)
+      }.fold(0L)(Math.addExact(_: Long, _: Long))
+      ranks.unpersist(blocking = false)
+      ranks = next
       it += 1
     }
-    val out = ranks.select(col("host"), col("rank"))
-      .localCheckpoint(eager = false)
-    out.count() // materialize before unpersisting the inputs it no longer needs
-    e.unpersist(); nodes.unpersist(); e2.unpersist(); nodesF.unpersist()
-    out
+    graph.unpersist(blocking = false)
+    val rows = ranks.flatMap(b => Iterator.range(0, b.size).map(i => Row(b.k(i), b.v(i))))
+    spark.createDataFrame(rows, StructType(Seq(
+        StructField("host", LongType, nullable = false),
+        StructField("rank", LongType, nullable = false))))
+      .select(col("host").cast(idType).as("host"), col("rank"))
+  }
+
+  /** One partition of [[pageRank]]'s graph: `hosts` ascending, and the
+    * distinct out-links of `hosts(i)` are `dst(start(i) until start(i + 1))`
+    * (none: a dangling host).
+    */
+  private final class PrGraph(val hosts: Array[Long], val start: Array[Int],
+                              val dst: Array[Long]) extends Serializable {
+    def degree(i: Int): Int = start(i + 1) - start(i)
+    def dangling: Int = (0 until hosts.length).count(degree(_) == 0)
+  }
+
+  private object PrGraph {
+    /** Merges the partition's sorted distinct links with the distinct
+      * link targets that hash to it.
+      */
+    def apply(out: LongPairs.Block, targets: Iterator[Long]): PrGraph = {
+      val ts = targets.toArray
+      java.util.Arrays.sort(ts)
+      val hosts = Array.newBuilder[Long]; val start = Array.newBuilder[Int]
+      var i = 0; var j = 0
+      while (i < out.size || j < ts.length) {
+        val h = if (j == ts.length || (i < out.size && out.k(i) <= ts(j))) out.k(i) else ts(j)
+        hosts += h; start += i
+        while (i < out.size && out.k(i) == h) i += 1
+        if (j < ts.length && ts(j) == h) j += 1
+      }
+      start += out.size
+      new PrGraph(hosts.result(), start.result(), out.v)
+    }
   }
 
   /** WEIGHTED PageRank — the real link-graph form, where an edge carries
@@ -502,8 +554,9 @@ object WebOps {
     val n = nodes.count()
     require(n > 0, "pageRankWeighted: empty edge set")
     val pN = Adapt.partitionsFor(nodes, n)
-    // same round shape as [[pageRank]]: out-weight on the edge frame,
-    // dangling flag on the rank state
+    // out-weight rides the edge frame and the dangling flag the rank
+    // state, so a round needs one join for the contributions and none
+    // for the dangling mass
     val e2 = e.join(e.groupBy("src").agg(sum(col("w")).as("wsum")), "src")
       .coalesce(math.max(pN, Adapt.partitionsForPlan(edges)))
       .persist()
@@ -518,8 +571,9 @@ object WebOps {
       .localCheckpoint(eager = false)
     var it = 0
     while (it < iters) {
-      // lazy dangling mass (see [[pageRank]]): one-row aggregate
-      // broadcast into the round — no per-round driver sync
+      // lazy dangling mass: a one-row aggregate broadcast-cross-joined
+      // into the round, so the rounds run as one lazy query cascade
+      // with no per-round driver sync
       val dangDf = ranks.filter(col("dang"))
         .agg(coalesce(sum(col("rank")), lit(0L)).as("dangm"))
       val contrib = ranks.join(e2, ranks("host") === e2("src"))
@@ -680,8 +734,8 @@ object WebOps {
       .persist()
     val n = nodes.count()
     val pN = Adapt.partitionsFor(nodes, n)
-    // same round shape as [[pageRank]]: out-degree on the edge frame,
-    // seed AND dangling flags on the node/rank state
+    // out-degree rides the edge frame, seed AND dangling flags the
+    // node/rank state
     val e2 = e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
       .coalesce(math.max(pN, Adapt.partitionsForPlan(edges)))
       .persist()
@@ -710,8 +764,9 @@ object WebOps {
       .localCheckpoint(eager = false)
     var it = 0
     while (it < iters) {
-      // lazy dangling mass (see [[pageRank]]): one-row aggregate
-      // broadcast into the round — no per-round driver sync
+      // lazy dangling mass: a one-row aggregate broadcast-cross-joined
+      // into the round, so the rounds run as one lazy query cascade
+      // with no per-round driver sync
       val dangDf = ranks.filter(col("dang"))
         .agg(coalesce(sum(col("rank")), lit(0L)).as("dangm"))
       val contrib = ranks.join(e2, ranks("host") === e2("src"))

@@ -118,4 +118,16 @@ class RangeJoinSpec extends AnyFunSuite {
     assert(RangeJoin.rangeJoinCells(p, p.filter(col("id") < 10), 1000000L, 6,
       maxProbes = 10L).count() >= 0)
   }
+
+  test("a probe set of exactly maxProbes + 1 rows is rejected") {
+    val p = pts(100)
+    val probes = p.filter(col("id") < 11).repartition(3)
+    assert(probes.count() == 11)
+    val err = intercept[IllegalArgumentException] {
+      RangeJoin.rangeJoinCells(p, probes, 1000000L, 6, maxProbes = 10L)
+    }
+    assert(err.getMessage.contains("broadcast bound"))
+    assert(RangeJoin.rangeJoinCells(p, probes, 1000000L, 6, maxProbes = 11L)
+      .count() >= 0)
+  }
 }

@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Connected components (alternating large/small-star contraction) and
@@ -62,6 +65,116 @@ class DedupSpec extends AnyFunSuite {
 
   test("connectedComponents of an empty edge list is empty") {
     assert(components() == Map.empty[Long, Long])
+  }
+
+  /** A random edge list of integral ids (None = null endpoint): random
+    * edges, a hub star, isolated pairs, duplicate and reversed copies,
+    * self-loops and null endpoints, in shuffled order.
+    */
+  private val graphGen: Gen[(Boolean, Seq[(Option[Long], Option[Long])])] = for {
+    intIds <- Gen.oneOf(true, false)
+    base <- if (intIds) Gen.oneOf(0L, -1000L, Int.MaxValue - 20000L)
+            else Gen.oneOf(0L, 1L << 40, Long.MinValue + 1)
+    n <- Gen.choose(2, 40)
+    rand <- Gen.choose(0, 60).flatMap(m =>
+      Gen.listOfN(m, Gen.zip(Gen.choose(0L, n - 1L), Gen.choose(0L, n - 1L))))
+    leaves <- Gen.choose(0, 30)
+    pairs <- Gen.choose(0, 5)
+    copies <- Gen.choose(0, 10)
+    loops <- Gen.listOf(Gen.choose(0L, n + 1L))
+    nulls <- Gen.listOf(Gen.choose(0L, n + 1L))
+    order <- Gen.choose(0L, Long.MaxValue)
+  } yield {
+    val hub = n + 100L
+    val core = rand ++ (1 to leaves).map(j => if (j % 2 == 0) (hub, hub + j) else (hub + j, hub)) ++
+      (0 until pairs).map(p => (n + 1000L + 2 * p, n + 1001L + 2 * p))
+    val dups = core.take(copies).flatMap(e => Seq(e, e.swap))
+    val valid = (core ++ dups ++ loops.map(x => (x, x))).map { case (a, b) =>
+      (Some(base + a), Some(base + b)) }
+    val withNulls = valid ++ nulls.zipWithIndex.map { case (x, i) =>
+      if (i % 3 == 0) (None, Some(base + x)) else if (i % 3 == 1) (Some(base + x), None)
+      else (None, None) }
+    (intIds, new scala.util.Random(order).shuffle(withNulls))
+  }
+
+  /** Union-find components: node -> smallest member, over the edges with
+    * two distinct non-null endpoints.
+    */
+  private def unionFind(es: Seq[(Option[Long], Option[Long])]): Map[Long, Long] = {
+    val edges = es.collect { case (Some(a), Some(b)) if a != b => (a, b) }
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(x => x -> find(x)).toMap
+  }
+
+  /** Rounds the large-star / small-star contraction takes on edge SETS:
+    * the loop's round count, since a set is what its dedup and exact
+    * signature compare.
+    */
+  private def starRounds(es: Seq[(Option[Long], Option[Long])]): Int = {
+    var e = es.collect { case (Some(a), Some(b)) if a != b => (a min b, a max b) }.toSet
+    var it = 0
+    var converged = e.isEmpty
+    while (!converged) {
+      val nbrs = (e ++ e.map(_.swap)).groupMap(_._1)(_._2).toSeq
+      val large = for ((n, ns) <- nbrs; m = (ns + n).min; x <- ns.toSeq if x > n) yield (x, m)
+      val small = (for ((x, ms) <- large.groupMap(_._1)(_._2).toSeq; m = ms.min;
+                        u <- ms :+ x if u != m) yield (m, u)).toSet
+      it += 1
+      converged = small == e
+      e = small
+    }
+    it
+  }
+
+  test("property: CC equals union-find on random graphs, Int and Long ids, 1/3/8 partitions") {
+    var seed = Seed(20261017L)
+    for (_ <- 0 until 10) {
+      val (intIds, es) = graphGen.pureApply(Gen.Parameters.default, seed)
+      seed = seed.next
+      val t = if (intIds) IntegerType else LongType
+      def id(x: Option[Long]): Any =
+        x.map[Any](v => if (intIds) Int.box(v.toInt) else Long.box(v)).orNull
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(es.map { case (a, b) => Row(id(a), id(b)) }, 2),
+        StructType(Seq(StructField("src", t), StructField("dst", t))))
+      val want = unionFind(es)
+      val wantRounds = starRounds(es)
+      for (parts <- Seq(1, 3, 8)) {
+        val (comp, rounds) = Dedup.starContraction(df, 64, parts)
+        assert(rounds === wantRounds, s"parts=$parts")
+        assert(comp.schema.map(_.name) === Seq("node", "component"))
+        assert(comp.schema.map(_.dataType) === Seq(t, t), s"parts=$parts")
+        val rows = comp.collect().map(r =>
+          if (intIds) r.getInt(0).toLong -> r.getInt(1).toLong else r.getLong(0) -> r.getLong(1))
+        assert(rows.length === want.size, s"parts=$parts: one row per node")
+        assert(rows.toMap === want, s"parts=$parts intIds=$intIds edges=$es")
+      }
+    }
+  }
+
+  test("lshClusters releases its cache") {
+    import spark.implicits._
+    val docs = Seq(
+      0L -> "spark shuffle partition join agg",
+      1L -> "spark shuffle partition join agg",
+      2L -> "spark shuffle partition join scan",
+      3L -> "totally different words entirely here").toDF("doc_id", "text")
+    // caches (a cached table's column buffers included), as opposed to
+    // the checkpoint blocks that the result owns and the ContextCleaner
+    // frees with it
+    def caches(): Set[Int] = spark.sparkContext.getPersistentRDDs.values
+      .filterNot(_.isCheckpointed).map(_.id).toSet
+    val before = caches()
+    assert(Dedup.lshClusters(docs, k = 8, bands = 4).collect().length == 4)
+    assert((caches() -- before).isEmpty)
   }
 
   test("shingleTable builds word n-grams; short docs shingle to nothing") {

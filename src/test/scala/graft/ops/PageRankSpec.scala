@@ -83,6 +83,31 @@ class PageRankSpec extends AnyFunSuite {
     assert(a === refRank(edges, 5))
   }
 
+  test("200 iterations run under the default broadcast timeout and match the reference") {
+    // the session leaves spark.sql.broadcastTimeout at its 300 s default
+    val edges = Seq[(Long, Long)]((0, 1), (1, 2), (2, 0), (2, 3), (4, 2), (4, 5), (5, 4))
+    assert(runSpark(edges, 200) === refRank(edges, 200))
+  }
+
+  test("an overflowing rank product throws, as it did under ANSI SQL") {
+    import spark.implicits._
+    // rank = scale / 2, and rank * dampNum leaves the Long range
+    val e = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
+    val err = intercept[Exception](
+      WebOps.pageRank(e, iters = 1, scale = Long.MaxValue / 2).collect())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), err)
+  }
+
+  test("Int host ids come back as Int") {
+    import spark.implicits._
+    val r = WebOps.pageRank(Seq((0, 1), (1, 2), (2, 0)).toDF("src", "dst"), iters = 2)
+    assert(r.schema.map(_.dataType) ===
+      Seq(org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType))
+    assert(r.collect().map(row => row.getInt(0).toLong -> row.getLong(1)).toMap ===
+      refRank(Seq((0L, 1L), (1L, 2L), (2L, 0L)), 2))
+  }
+
   test("rejects bad parameters and empty graphs") {
     import spark.implicits._
     val e = Seq((0L, 1L)).toDF("src", "dst")
