@@ -1,11 +1,10 @@
 package graft.ops
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication operators for web-corpus pipelines: exact, MinHash+LSH,
   * n-gram Jaccard, SimHash. All hashing is md5-based so every stage is
@@ -573,20 +572,28 @@ object Dedup {
     *
     * The loop runs on primitive `(Long, Long)` records (the
     * [[LongPairs]] rule: Kryo-serialized shuffles, `long[]` task memory)
-    * under one `HashPartitioner(defaultParallelism)`, with no per-round
-    * Catalyst planning or code generation. The canonical edge set
-    * (u < v, ids read as Long, duplicates and self-loops dropped) is
-    * built once. Each round is three shuffles: the symmetrized edges by
-    * node (large-star), the large-star output by its larger endpoint
-    * (small-star), then the small-star output by its smaller endpoint
-    * (dedup). After each shuffle a partition is sorted locally by
-    * (key, value), so every key group streams with its minimum first and
-    * no neighbourhood is ever gathered into a row — the algorithm
-    * survives components with billions of members, exactly the regime
-    * (giant near-dup clusters of boilerplate pages) where transitive
-    * closure is quadratic and plain label propagation needs
-    * diameter-many rounds. Convergence is O(log² n) rounds worst-case and
-    * a handful in practice.
+    * under one `HashPartitioner`, sized once from the canonical edge
+    * count (`LongPairs.width`: size-derived, floored at
+    * `defaultParallelism`), with no per-round Catalyst planning or code
+    * generation. The canonical edge set (u < v, ids read as Long,
+    * duplicates and self-loops dropped) is built once. Each round is
+    * three shuffles: the symmetrized edges by node (large-star), the
+    * large-star output by its larger endpoint (small-star), then the
+    * small-star output by its smaller endpoint (dedup). After each
+    * shuffle a partition is sorted locally by (key, value), so every key
+    * group streams with its minimum first and no neighbourhood is ever
+    * gathered into a row. Contraction beats transitive closure (quadratic
+    * in a giant near-dup cluster) and plain label propagation
+    * (diameter-many rounds): convergence is O(log² n) rounds worst-case
+    * and a handful in practice.
+    *
+    * Memory bound: nothing spills, and a key group is never split across
+    * tasks, so one task holds its partition's records at 16 bytes each.
+    * At the fixed point every edge of a component is keyed by its root,
+    * so the largest component (and the largest neighbourhood of any
+    * round) must fit in one task's heap and stay under
+    * `LongPairs.MaxRecords` edges; past that the task fails with a clear
+    * error.
     *
     * Each round ends with one `localCheckpoint` and one fold job, which
     * materializes it while computing the exact edge-set signature:
@@ -612,19 +619,21 @@ object Dedup {
     */
   def connectedComponentsWithRounds(edges: DataFrame,
                                     maxIter: Int = 64): (DataFrame, Int) =
-    starContraction(edges, maxIter, edges.sparkSession.sparkContext.defaultParallelism)
+    starContraction(edges, maxIter, LongPairs.width(edges.sparkSession, _))
 
-  /** [[connectedComponentsWithRounds]] with the loop's partition count. */
+  /** [[connectedComponentsWithRounds]] with the loop's partition count
+    * as a function of the canonical edge count.
+    */
   private[ops] def starContraction(edges: DataFrame, maxIter: Int,
-                                   partitions: Int): (DataFrame, Int) = {
+                                   width: Long => Int): (DataFrame, Int) = {
     val idType = LongPairs.idType(edges)
     val spark = edges.sparkSession
-    val part = new HashPartitioner(partitions)
     // a null endpoint makes least = greatest, so u =!= v drops it too
     val canon = LongPairs.read(edges
       .select(least(col("src"), col("dst")).cast("long").as("u"),
               greatest(col("src"), col("dst")).cast("long").as("v"))
       .filter(col("u") =!= col("v")))
+    val part = new HashPartitioner(width(canon.count()))
     var e = LongPairs.shuffleSorted(canon, part, unique = true).localCheckpoint()
     var sig = ccSignature(e)
     var converged = sig.count == 0L
@@ -670,15 +679,10 @@ object Dedup {
     val rows = e.flatMap { b =>
       LongPairs.groups(b).flatMap { case (s, end) =>
         val u = b.k(s)
-        Iterator.single(Row(u, u)) ++ Iterator.range(s, end).map(i => Row(b.v(i), u))
+        Iterator.single((u, u)) ++ Iterator.range(s, end).map(i => (b.v(i), u))
       }
     }
-    val out = spark.createDataFrame(rows, StructType(Seq(
-        StructField("node", LongType, nullable = false),
-        StructField("component", LongType, nullable = false))))
-      .select(col("node").cast(idType).as("node"),
-        col("component").cast(idType).as("component"))
-    (out, it)
+    (LongPairs.toFrame(spark, rows, "node" -> idType, "component" -> idType), it)
   }
 
   /** Edge-set signature of a CC round: an edge count and a 128-bit sum. */
@@ -714,8 +718,10 @@ object Dedup {
     * edge per (doc, band), |E| = n_docs × bands) — connectivity of the
     * "shares a bucket" relation is preserved exactly while the quadratic
     * pair enumeration inside giant duplicate buckets never happens, which
-    * is what makes clustering viable on a 10^12-page corpus whose top
-    * boilerplate cluster alone can hold 10^8 members.
+    * is what makes clustering viable on a corpus whose top boilerplate
+    * cluster holds 10^8 members. The star contraction then holds that
+    * cluster as one key group in one task (see [[connectedComponents]]'s
+    * memory bound).
     */
   def lshClusters(docs: DataFrame, k: Int, bands: Int,
                   family: String = "xxhash64"): DataFrame = {

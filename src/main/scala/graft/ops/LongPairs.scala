@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,6 +21,11 @@ import org.apache.spark.sql.types._
   * doubling copy), sorted in place by (key, value) and trimmed into a
   * [[Block]]. Nothing boxed outlives its record, and no key group (a
   * graph neighbourhood) is ever collected into one row or one object.
+  * Nothing spills either: the loops size their partitioner from their
+  * input's record count ([[width]]), so r stays near
+  * `Adapt.rowsPerTask` records on a balanced graph, but a partition
+  * always holds its key groups whole, and a partition past 2^30 records
+  * fails with a clear error instead of overflowing its buffers.
   */
 private[ops] object LongPairs {
 
@@ -45,6 +50,22 @@ private[ops] object LongPairs {
   def read(df: DataFrame): RDD[(Long, Long)] =
     df.queryExecution.toRdd.map(r => (r.getLong(0), r.getLong(1)))
 
+  /** The loop partition count for `rows` input records: the size-derived
+    * `Adapt.partitionsForRows`, floored at the cluster's parallelism.
+    */
+  def width(spark: SparkSession, rows: Long): Int =
+    math.max(spark.sparkContext.defaultParallelism, Adapt.partitionsForRows(spark, rows))
+
+  /** Records as a two-column frame, each column `(name, type)` cast from
+    * bigint to its type (the input's id type, for an id column).
+    */
+  def toFrame(spark: SparkSession, rows: RDD[(Long, Long)],
+              key: (String, DataType), value: (String, DataType)): DataFrame =
+    spark.createDataFrame(rows.map { case (k, v) => Row(k, v) }, StructType(Seq(
+        StructField(key._1, LongType, nullable = false),
+        StructField(value._1, LongType, nullable = false))))
+      .select(col(key._1).cast(key._2).as(key._1), col(value._1).cast(value._2).as(value._1))
+
   /** Shuffle `recs` to `part` and sort each partition into one [[Block]];
     * `unique` also drops repeated records.
     */
@@ -53,12 +74,17 @@ private[ops] object LongPairs {
     recs.partitionBy(part).mapPartitions(it => Iterator(sorted(it, unique)),
       preservesPartitioning = true)
 
+  /** The most records one [[Block]] holds: its buffers double in size. */
+  val MaxRecords: Int = 1 << 30
+
   /** Reads `it` into one sorted [[Block]]; `unique` drops repeats. */
   def sorted(it: Iterator[Product2[Long, Long]], unique: Boolean): Block = {
     var k = new Array[Long](1024); var v = new Array[Long](1024); var n = 0
     while (it.hasNext) {
       val p = it.next()
       if (n == k.length) {
+        require(n < MaxRecords, s"a graph-loop partition holds more than $MaxRecords " +
+          "records: one key group (a node's neighbourhood) is too large for one task")
         k = java.util.Arrays.copyOf(k, 2 * n); v = java.util.Arrays.copyOf(v, 2 * n)
       }
       k(n) = p._1; v(n) = p._2; n += 1

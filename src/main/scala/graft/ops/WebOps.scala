@@ -1,10 +1,10 @@
 package graft.ops
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
@@ -389,13 +389,14 @@ object WebOps {
     * scale that is a 10^-12-relative error per edge, far below float
     * noise.
     *
-    * Scale shape (10^9 hosts, 10^11 edges): the loop runs on primitive
-    * `(Long, Long)` records (the [[LongPairs]] rule: Kryo-serialized
-    * shuffles, `long[]` task memory) under one
-    * `HashPartitioner(defaultParallelism)`, with no per-round Catalyst
-    * planning. The adjacency (`src → distinct dst[]`, deduped and
-    * self-loop-stripped) and the node/dangling table are built once into
-    * one checkpointed block per partition, co-partitioned with the
+    * The loop runs on primitive `(Long, Long)` records (the
+    * [[LongPairs]] rule: Kryo-serialized shuffles, `long[]` task memory)
+    * under one `HashPartitioner`, sized once from the link count
+    * (`LongPairs.width`: size-derived, floored at `defaultParallelism`),
+    * with no per-round Catalyst planning. The adjacency
+    * (`src → distinct dst[]`, deduped and self-loop-stripped) and the
+    * node/dangling table are built once into one checkpointed block per
+    * partition, co-partitioned with the
     * `(host, rank)` state. Each iteration is a narrow join of the ranks
     * with the adjacency, a `reduceByKey` of the contributions (map-side
     * combined, so a hot authority with 10^8 in-links costs its reducer
@@ -404,6 +405,12 @@ object WebOps {
     * materializes the round and sums its dangling mass — one Long for
     * the driver, used by the next round. Nothing is broadcast, and no
     * iteration waits on another's lazy plan.
+    *
+    * Memory bound: nothing spills, and one task holds its partition's
+    * adjacency and contributions whole, at 8–16 bytes per link. A host's
+    * out-links are one key group, so the largest out-degree must fit in
+    * one task's heap and stay under `LongPairs.MaxRecords`; in-links
+    * arrive map-side combined, one record per host.
     *
     * Input: `edges(src, dst)` integral host ids (duplicates and
     * self-loops tolerated). Returns `(host, rank)` of the input's id type
@@ -417,11 +424,11 @@ object WebOps {
         s"iters=$iters scale=$scale damp=$dampNum/$dampDen")
     val idType = LongPairs.idType(edges)
     val spark = edges.sparkSession
-    val part = new HashPartitioner(spark.sparkContext.defaultParallelism)
     val links = LongPairs.read(edges
       .select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst")))
+    val part = new HashPartitioner(LongPairs.width(spark, links.count()))
     // distinct out-links, sorted by (src, dst) in src's partition
     val out = LongPairs.shuffleSorted(links, part, unique = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -487,11 +494,8 @@ object WebOps {
       it += 1
     }
     graph.unpersist(blocking = false)
-    val rows = ranks.flatMap(b => Iterator.range(0, b.size).map(i => Row(b.k(i), b.v(i))))
-    spark.createDataFrame(rows, StructType(Seq(
-        StructField("host", LongType, nullable = false),
-        StructField("rank", LongType, nullable = false))))
-      .select(col("host").cast(idType).as("host"), col("rank"))
+    val rows = ranks.flatMap(b => Iterator.range(0, b.size).map(i => (b.k(i), b.v(i))))
+    LongPairs.toFrame(spark, rows, "host" -> idType, "rank" -> LongType)
   }
 
   /** One partition of [[pageRank]]'s graph: `hosts` ascending, and the

@@ -148,7 +148,7 @@ class DedupSpec extends AnyFunSuite {
       val want = unionFind(es)
       val wantRounds = starRounds(es)
       for (parts <- Seq(1, 3, 8)) {
-        val (comp, rounds) = Dedup.starContraction(df, 64, parts)
+        val (comp, rounds) = Dedup.starContraction(df, 64, _ => parts)
         assert(rounds === wantRounds, s"parts=$parts")
         assert(comp.schema.map(_.name) === Seq("node", "component"))
         assert(comp.schema.map(_.dataType) === Seq(t, t), s"parts=$parts")

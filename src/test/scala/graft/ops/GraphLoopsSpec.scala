@@ -90,12 +90,35 @@ class GraphLoopsSpec extends AnyFunSuite {
         assert(flushed, "listener events not delivered")
       } finally spark.sparkContext.removeSparkListener(listener)
       val all = jobs.toArray(Array.empty[Seq[Int]]).toSeq
-      // set-up plus at least two rounds
-      assert(all.size >= 3, s"$name: ${all.size} jobs")
-      all.zipWithIndex.foreach { case (tasks, i) =>
+      // the input count, the set-up, and at least two rounds
+      assert(all.size >= 4, s"$name: ${all.size} jobs")
+      assert(all.head.size == 1, s"$name: the count is one scan of the input, ${all.head}")
+      all.zipWithIndex.drop(1).foreach { case (tasks, i) =>
         // every stage but the set-up job's scan of the input
-        assert(tasks.drop(if (i == 0) 1 else 0).forall(_ == par), s"$name job $i: $tasks")
+        assert(tasks.drop(if (i == 1) 1 else 0).forall(_ == par), s"$name job $i: $tasks")
       }
+    }
+  }
+
+  test("the loop width grows with the record count, floored at defaultParallelism") {
+    val par = spark.sparkContext.defaultParallelism
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    try {
+      assert(LongPairs.width(spark, 0L) == par)
+      assert(LongPairs.width(spark, Adapt.rowsPerTask) == par)
+      assert(LongPairs.width(spark, 10 * Adapt.rowsPerTask) == math.max(par, 10))
+      // capped at the session's shuffle partitions
+      assert(LongPairs.width(spark, 1000 * Adapt.rowsPerTask) == math.max(par, 64))
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  test("CC and PageRank reject non-integral ids") {
+    import spark.implicits._
+    val in = Seq("a" -> "b", "b" -> "c").toDF("src", "dst")
+    for (run <- Seq[() => Any](() => Dedup.connectedComponents(in), () => WebOps.pageRank(in))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("graph ids must be integral"), e.getMessage)
     }
   }
 }
